@@ -1102,8 +1102,8 @@ def capture_recapture_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = ((F.col("n1") + 1).cast("double")
            * (F.col("n2") + 1).cast("double")
            / (F.col("m") + 1).cast("double") - F.lit(1.0))
-    return (n1.crossJoin(F.broadcast(n2)).crossJoin(F.broadcast(m))
-            .crossJoin(F.broadcast(truth))
+    return (n1.crossJoin(n2).crossJoin(m)
+            .crossJoin(truth)
             .select("n1", "n2", "m", "n_true",
                     F.round(est, 6).alias("n_estimate"),
                     F.round((est - F.col("n_true").cast("double"))
@@ -1176,7 +1176,7 @@ def jackknife_ratio_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = grp.agg(F.sum("sc").alias("tc"), F.sum("st").alias("tt"),
                   F.count(F.lit(1)).alias("n_groups"))
     dec6 = "decimal(25,6)"
-    loo = (grp.crossJoin(F.broadcast(tot))
+    loo = (grp.crossJoin(tot)
            .select("n_groups", "tc", "tt",
                    F.round((F.col("tc") - F.col("sc")).cast("double")
                            / (F.col("tt") - F.col("st")).cast("double"),
@@ -1314,7 +1314,7 @@ def kruskal_wallis_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("two_r").cast("double") * F.col("two_r").cast("double")
               / (F.lit(4.0) * F.col("n_s").cast("double")))
         .alias("sum_r2n"))
-        .crossJoin(F.broadcast(ties)))
+        .crossJoin(ties))
     nd = F.col("n_total").cast("double")
     h = (F.lit(12.0) / (nd * (nd + F.lit(1.0))) * F.col("sum_r2n")
          - F.lit(3.0) * (nd + F.lit(1.0)))
@@ -1414,7 +1414,7 @@ def skyline_pareto_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                         | (F.col("m_before") < F.col("gmax")))
                 .select(F.col("c").alias("fc"),
                         F.col("gmax").alias("ft")))
-    return (pts.join(F.broadcast(frontier),
+    return (pts.join(frontier,
                      (F.col("c") == F.col("fc"))
                      & (F.col("t") == F.col("ft")))
             .select("doc_id", F.col("c").alias("n_chars"),
@@ -1481,7 +1481,7 @@ def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = Window.orderBy("decile").rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
     tot = per.agg(F.sum("n_docs").alias("tn"), F.sum("n_pos").alias("tp"))
-    cum = (per.crossJoin(F.broadcast(tot))
+    cum = (per.crossJoin(tot)
            .withColumn("cum_n", F.sum("n_docs").over(wc))
            .withColumn("cum_p", F.sum("n_pos").over(wc)))
     rate = F.col("n_pos").cast("double") / F.col("n_docs").cast("double")
@@ -1735,7 +1735,7 @@ def median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         (split_sum(scaled_long("value"), 10 ** 4).cast("double")
          / F.count(F.lit(1))).alias("plain_mean"))
-    return (overall.crossJoin(F.broadcast(med))
+    return (overall.crossJoin(med)
             .select("n", F.lit(MOM_BUCKETS).alias("n_buckets"),
                     F.round(F.col("mom"), 10).alias("mom"),
                     F.round(F.col("plain_mean"), 10).alias("plain_mean"),

@@ -440,15 +440,13 @@ def soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     column is the only new math, and 1/int is one correctly-rounded
     division, identical cross-engine.
 
-    Scale: cluster sizes are one combinable count over the (bigint)
-    label relation; the weight join ships (cluster_id, commonness)
-    pairs — bounded by the number of clusters, broadcastable.
+    Scale: cluster sizes are one count window over the cluster key —
+    a single shuffle of (doc_id, cluster_id) pairs, no join back.
     """
     cc = connected_components_dedup(spark, sf_dir)
-    sizes = cc.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("commonness"))
+    commonness = F.count(F.lit(1)).over(Window.partitionBy("cluster_id"))
     return (
-        cc.join(F.broadcast(sizes), "cluster_id")
+        cc.withColumn("commonness", commonness)
         .select("doc_id", "cluster_id", "commonness",
                 (F.lit(1.0) / F.col("commonness")).alias("weight")))
 
@@ -528,7 +526,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_src = ((F.col("c_src") + 1).cast("double")
              / (F.col("t_src") + DSIR_K).cast("double"))
     ratios = (
-        src.join(tgt, "bucket", "left").join(F.broadcast(tot))
+        src.join(tgt, "bucket", "left").join(tot)
         .select("bucket",
                 F.round(F.log(p_tgt / p_src), 10)
                 .cast("decimal(25,10)").alias("lr")))
@@ -616,7 +614,7 @@ def integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orphan_orders = check(
         "orders_custkey_fk",
-        o.join(F.broadcast(c.select("c_custkey")),
+        o.join(c.select("c_custkey"),
                o.o_custkey == F.col("c_custkey"), "left_anti")
         .agg(F.count(F.lit(1)).alias("violations")))
     dup_custkeys = check(
@@ -764,7 +762,7 @@ def quantile_normalize_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                          .alias("rank_start"), "rank_end",
                          F.col("score").alias("normalized_score")))
     n_total = docs.agg(F.count(F.lit(1)).alias("n_total"))
-    with_target = (ranked.crossJoin(F.broadcast(n_total))
+    with_target = (ranked.crossJoin(n_total)
                    .withColumn(
                        "target_rank",
                        F.floor((F.col("r") * F.col("n_total")
@@ -845,7 +843,7 @@ def shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_chars").alias("total_chars"),
                 F.countDistinct("lang").alias("n_langs")))
     total = docs.agg(F.count(F.lit(1)).alias("n_total"))
-    return (per.crossJoin(F.broadcast(total))
+    return (per.crossJoin(total)
             .select("shard", "n_docs", "total_tokens", "total_chars",
                     "n_langs",
                     F.round(F.col("n_docs")
@@ -909,7 +907,7 @@ def ks_drift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = (sources.crossJoin(F.broadcast(support))
             .join(counts, ["source", "n_chars"], "left")
             .join(F.broadcast(glob), "n_chars")
-            .crossJoin(F.broadcast(total))
+            .crossJoin(total)
             .withColumn("c", F.coalesce("c", F.lit(0))))
     w = Window.partitionBy("source").orderBy("n_chars")
     dec = "decimal(38,0)"
@@ -1184,21 +1182,21 @@ def forget_customer_purge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tomb = cust.filter(is_tomb).select(F.col("c_custkey").alias("k"))
 
     def audit(df: DataFrame, table: str, key: str) -> DataFrame:
-        return (df.join(F.broadcast(tomb.withColumn("hit", F.lit(1))),
+        return (df.join(tomb.withColumn("hit", F.lit(1)),
                         df[key] == F.col("k"), "left")
                 .agg(F.lit(table).alias("table_name"),
                      F.count(F.lit(1)).alias("n_rows"),
                      F.sum(F.coalesce("hit", F.lit(0))).cast("bigint")
                      .alias("n_purged")))
 
-    ord_tomb = (orders.join(F.broadcast(tomb),
+    ord_tomb = (orders.join(tomb,
                             orders.o_custkey == F.col("k"), "left_semi")
                 .select(F.col("o_orderkey").alias("k")))
     per_table = (
         audit(cust, "customer", "c_custkey")
         .unionByName(audit(orders, "orders", "o_custkey"))
         .unionByName(
-            li.join(F.broadcast(ord_tomb.withColumn("hit", F.lit(1))),
+            li.join(ord_tomb.withColumn("hit", F.lit(1)),
                     li.l_orderkey == F.col("k"), "left")
             .agg(F.lit("lineitem").alias("table_name"),
                  F.count(F.lit(1)).alias("n_rows"),
@@ -1450,7 +1448,7 @@ def chi2_independence_lang_source(spark: SparkSession,
     cols_ = obs.groupBy("source").agg(F.sum("o").alias("c"))
     n_ = obs.agg(F.sum("o").alias("n"))
     grid = (rows_.crossJoin(F.broadcast(cols_))
-            .crossJoin(F.broadcast(n_))
+            .crossJoin(n_)
             .join(obs, ["lang", "source"], "left")
             .select("lang", "source", "r", "c", "n",
                     F.coalesce("o", F.lit(0)).alias("o")))
@@ -1471,7 +1469,7 @@ def chi2_independence_lang_source(spark: SparkSession,
         F.round(F.sum("term").cast("double"), 6).alias("chi2"),
         ((F.countDistinct("lang") - 1)
          * (F.countDistinct("source") - 1)).alias("dof"))
-    return agg.crossJoin(F.broadcast(top))
+    return agg.crossJoin(top)
 
 
 CHI2_INDEPENDENCE_SQL = """
@@ -1615,14 +1613,14 @@ def neyman_allocation_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                   F.count(F.lit(1)).alias("n_strata"))
     quota = (F.col("w").cast("double")
              * F.lit(float(NEYMAN_BUDGET)) / F.col("w_total"))
-    q = (per.crossJoin(F.broadcast(tot))
+    q = (per.crossJoin(tot)
          .withColumn("quota", quota)
          .withColumn("alloc_floor", F.floor("quota").cast("long"))
          .withColumn("frac", F.col("quota") - F.floor("quota")))
     leftover = (q.agg((F.lit(NEYMAN_BUDGET)
                        - F.sum("alloc_floor")).alias("leftover")))
     w_rank = Window.orderBy(F.col("frac").desc(), "source")
-    return (q.crossJoin(F.broadcast(leftover))
+    return (q.crossJoin(leftover)
             .withColumn("rnk", F.row_number().over(w_rank))
             .select("source", "n_docs",
                     F.round(sigma, 10).alias("sigma"),
@@ -1825,7 +1823,7 @@ def blb_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_replicates").alias("n_replicates"),
         (F.sum(pin("ci_lo")).cast("double") / BLB_S).alias("ci_lo"),
         (F.sum(pin("ci_hi")).cast("double") / BLB_S).alias("ci_hi"))
-        .crossJoin(F.broadcast(totals))
+        .crossJoin(totals)
         .select(F.lit("BLB").alias("part"), "n_docs", "n_replicates",
                 "mean_est", "ci_lo", "ci_hi"))
     return sub_rows.unionByName(blb_row)
@@ -2137,7 +2135,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  .cast("binary")), 1, 1)
                >= TRAIN_FRAC_HEX, 1).otherwise(0))
         .alias("total_holdout"))
-    return (per_class.crossJoin(F.broadcast(tot))
+    return (per_class.crossJoin(tot)
             .select("pair_class", "n_pairs", "n_docs", "n_holdout_docs",
                     F.round(F.col("n_holdout_docs")
                             / F.col("total_holdout"), 10)
@@ -2432,7 +2430,7 @@ def direct_standardization_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_l = F.col("n_l").cast("double") / F.col("n_corpus").cast("double")
     r_sl = F.col("long_sl").cast("double") / F.col("n_sl").cast("double")
     terms = (cells.join(F.broadcast(langs), "lang")
-             .crossJoin(F.broadcast(total))
+             .crossJoin(total)
              .select("source", "n_sl", "long_sl",
                      F.round(w_l * r_sl, 10).cast(dec).alias("wr"),
                      F.round(w_l, 10).cast(dec).alias("w")))
@@ -2541,7 +2539,7 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_corpus").cast("double"))
     cells = (grid.join(cb, ["lang", "source", "b"], "left")
              .join(F.broadcast(gb), "b", "left")
-             .crossJoin(F.broadcast(total))
+             .crossJoin(total)
              .select("lang", "source", "b", "n_class",
                      F.round(diff, 10).cast("decimal(25,10)")
                      .alias("d_dec")))
@@ -2642,7 +2640,7 @@ def eb_shrinkage_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_raw = F.col("k").cast("double") / F.col("n").cast("double")
     p_eb = (F.col("k").cast("double") + m * pbar) \
         / (F.col("n").cast("double") + m)
-    scored = (agg.crossJoin(F.broadcast(pool))
+    scored = (agg.crossJoin(pool)
               .select("source", "n", "k",
                       F.round(p_raw, 6).alias("rate_raw"),
                       F.round(p_eb, 6).alias("rate_eb")))
@@ -2890,7 +2888,7 @@ def cramers_v_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         cols_ = obs.groupBy(b).agg(F.sum("o").alias("c"))
         n_ = obs.agg(F.sum("o").alias("n"))
         grid = (rows_.crossJoin(F.broadcast(cols_))
-                .crossJoin(F.broadcast(n_))
+                .crossJoin(n_)
                 .join(obs, [a, b], "left")
                 .select("r", "c", "n",
                         F.coalesce("o", F.lit(0)).alias("o"),

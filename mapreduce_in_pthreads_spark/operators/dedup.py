@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.lineage import truncate_lineage
+from ..sources.constants import constant_table
 from ..sources.tables import load_table
 
 N_HASHES = 8          # minhash signature length
@@ -657,7 +658,7 @@ def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.countDistinct("doc_id").alias("df"))
            .filter(F.col("df") > SPAN_DF_CAP)
            .select("g"))
-    cold = grams.join(F.broadcast(hot), "g", "left_anti")
+    cold = grams.join(hot, "g", "left_anti")
     a = cold.select(F.col("doc_id").alias("doc_a"),
                     F.col("pos").alias("pa"), "g")
     b = cold.select(F.col("doc_id").alias("doc_b"),
@@ -1160,7 +1161,7 @@ def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_pairs"),
                  F.sum(F.coalesce("in_truth", F.lit(0)))
                  .alias("n_overlap"))
-            .crossJoin(F.broadcast(n_truth))
+            .crossJoin(n_truth)
             .select("method", "n_pairs",
                     F.col("n_overlap").cast("bigint").alias("n_overlap"),
                     F.round(F.col("n_overlap")
@@ -1718,9 +1719,9 @@ def lsh_parameter_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      * LSH_PLAN_BINS).cast("int"),
                              F.lit(LSH_PLAN_BINS - 1)).alias("bin"))
             .groupBy("bin").agg(F.count(F.lit(1)).alias("n_bin")))
-    curve = spark.createDataFrame(
-        _lsh_s_curve(), "n_bands int, rows_per_band int, bin int, p double")
-    return (F.broadcast(curve).join(hist, "bin")
+    curve = constant_table(spark, _lsh_s_curve(),
+                           "n_bands int, rows_per_band int, bin int, p double")
+    return (curve.join(hist, "bin")
             .groupBy("n_bands", "rows_per_band")
             .agg(F.sum("n_bin").alias("n_pairs_binned"),
                  F.sum(F.round(F.col("n_bin") * F.col("p"), 6)
@@ -1929,9 +1930,9 @@ def fellegi_sunter_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.log(F.lit(m) / F.col(u_col))).otherwise(
             F.log(F.lit(1.0 - m) / (F.lit(1.0) - F.col(u_col))))
 
-    return (census.crossJoin(F.broadcast(u_src))
-            .crossJoin(F.broadcast(u_pre))
-            .crossJoin(F.broadcast(u_suf))
+    return (census.crossJoin(u_src)
+            .crossJoin(u_pre)
+            .crossJoin(u_suf)
             .select("ag_source", "ag_prefix", "ag_suffix", "n_pairs",
                     F.round(w("ag_source", FS_M_SOURCE, "u_source")
                             + w("ag_prefix", FS_M_PREFIX, "u_prefix")
@@ -2016,7 +2017,7 @@ def fleiss_kappa_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.count(F.lit(1)).alias("nc"))
               .filter(F.col("nc") >= 2).select("fp"))
     ex_ids = (docs.withColumn("fp", F.md5("text"))
-              .join(F.broadcast(dup_fp), "fp")
+              .join(dup_fp, "fp")
               .select("doc_id").distinct()
               .withColumn("e", F.lit(1)))
 

@@ -61,7 +61,7 @@ def cohens_kappa_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.col("n_docs").cast("decimal(38,0)")
     agree = F.col("n_agree").cast("decimal(38,0)")
     pe = F.col("pe_num").cast("decimal(38,0)")
-    return (tot.crossJoin(F.broadcast(pe_num))
+    return (tot.crossJoin(pe_num)
             .select(
                 F.col("n_docs").cast("bigint").alias("n_docs"),
                 F.col("n_agree").cast("bigint").alias("n_agree"),

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.normalize import normalize_word
+from ..sources.constants import constant_table
 from ..sources.tables import load_table
 
 
@@ -300,9 +301,9 @@ def phrase_search_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair blowup beyond true candidate positions.
     """
     tok = tokens(spark, sf_dir)
-    phrases = spark.createDataFrame(
-        list(PHRASES), "phrase_id bigint, w1 string, w2 string")
-    t1 = (tok.join(F.broadcast(phrases), tok.word == phrases.w1)
+    phrases = constant_table(
+        spark, PHRASES, "phrase_id bigint, w1 string, w2 string")
+    t1 = (tok.join(phrases, tok.word == phrases.w1)
           .select("phrase_id", "w1", "w2", "doc_id", "pos"))
     t2 = tok.select(F.col("doc_id").alias("doc_id2"),
                     F.col("pos").alias("pos2"),

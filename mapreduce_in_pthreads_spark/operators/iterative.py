@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions.lineage import truncate_lineage
 from ..functions.tokens import adjacent_pairs
+from ..sources.constants import constant_table
 from ..sources.tables import load_table
 from . import dedup as dd
 
@@ -97,7 +98,7 @@ def pagerank_word_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         # uniformly so Σrank stays 1 — the standard correction, kept as
         # a DataFrame aggregation (no collect): total leaked = 1 - Σrank
         total = ranks.agg(F.sum("rank").alias("s"))  # exact decimal sum
-        ranks = ranks.crossJoin(F.broadcast(total)).select(
+        ranks = ranks.crossJoin(total).select(
             "word",
             F.round(F.col("rank").cast("double")
                     + (F.lit(1) - F.col("s")).cast("double")
@@ -387,7 +388,7 @@ def word_graph_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
              .distinct())
     source = nodes.agg(F.min("word")).collect()[0][0]  # bounded scalar
 
-    dist = spark.createDataFrame([(source, 0)], "word string, dist bigint")
+    dist = constant_table(spark, [(source, 0)], "word string, dist bigint")
     frontier = dist
     for hop in range(1, BFS_HOPS + 1):
         nxt = (frontier.join(edges, frontier.word == edges.src)
@@ -452,7 +453,7 @@ def _guarded_word_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"))
     dw = tokens(spark, sf_dir).select("doc_id", "word").distinct()
     dfreq = dw.groupBy("word").agg(F.count(F.lit(1)).alias("dfreq"))
-    qual = (dfreq.crossJoin(F.broadcast(docs_n))
+    qual = (dfreq.crossJoin(docs_n)
             .filter((F.col("dfreq") >= TRIANGLE_MIN_DF)
                     & (F.col("dfreq") * 10
                        <= F.col("n_docs") * CC_MAX_DF_PCT10))
@@ -613,8 +614,8 @@ def k_core_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_n = counts[-2].withColumnRenamed("n", "n_prev")
     last_n = counts[-1].withColumnRenamed("n", "n_last")
     return (final_deg
-            .crossJoin(F.broadcast(prev_n))
-            .crossJoin(F.broadcast(last_n))
+            .crossJoin(prev_n)
+            .crossJoin(last_n)
             .select("word", "degree",
                     (F.col("n_prev") == F.col("n_last"))
                     .alias("converged")))
@@ -708,7 +709,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
         total = raw.agg(F.sum("raw").alias("s"))
         return truncate_lineage(
             nodes.join(raw, "word", "left")
-            .crossJoin(F.broadcast(total))
+            .crossJoin(total)
             .select("word",
                     F.round(F.coalesce("raw", zero).cast("double")
                             / F.col("s").cast("double"), 10)
@@ -840,8 +841,8 @@ def _pmi_collocation_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ma = marg.select(F.col("w").alias("wa"), F.col("m").alias("m_a"))
     mb = marg.select(F.col("w").alias("wb"), F.col("m").alias("m_b"))
     return truncate_lineage(
-        cab.crossJoin(F.broadcast(tot))
-        .join(F.broadcast(ma), "wa").join(F.broadcast(mb), "wb")
+        cab.crossJoin(tot)
+        .join(ma, "wa").join(mb, "wb")
         .filter(F.lit(2) * F.col("n") * F.col("c")
                 > F.col("m_a") * F.col("m_b"))
         .select("wa", "wb"))
@@ -911,7 +912,7 @@ def adamic_adar_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     n1 = nbr.select("z", F.col("x").alias("u"))
     n2 = nbr.select("z", F.col("x").alias("w"))
     wedges = (n1.join(n2, "z").filter(F.col("u") < F.col("w"))
-              .join(F.broadcast(deg), "z")
+              .join(deg, "z")
               .groupBy("u", "w")
               .agg(F.count(F.lit(1)).alias("n_common"),
                    F.sum(F.round(F.lit(1.0) / F.log(F.col("d")), 10)

@@ -3,9 +3,10 @@
 this is pure north-star extension.
 
 Scale strategy, made explicit per query:
-- dimension joins (region/nation/customer-side lookups) are DECLARED
-  broadcast with ``F.broadcast`` — at 100 TB the fact side never
-  shuffles for a lookup join;
+- dimension joins (region/nation/customer-side lookups) join straight
+  onto the fact side, so each build side is a base table the planner
+  can size: fixed-size dims always broadcast, SF-scaled dims broadcast
+  while they fit the session threshold;
 - fact-fact joins (orders ⋈ lineitem) shuffle on the join key; AQE
   handles skew splitting (session.py);
 - the event-sequence range join pre-partitions both sides by user so
@@ -25,8 +26,8 @@ from ..sources.tables import load_table
 def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: lineitem ⋈ orders (shuffle) ⋈ customer ⋈
     nation ⋈ region (broadcast dims), ASIA only, revenue per nation.
-    The two tiny dims are broadcast explicitly; customer is small
-    relative to facts so it broadcasts under the session threshold too."""
+    The planner broadcasts the two tiny dims, and customer while it
+    fits the session threshold."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
@@ -37,9 +38,9 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(dsum(revenue, "revenue"), F.count(F.lit(1)).alias("n_items"))
     )
@@ -336,11 +337,11 @@ def bloom_prefilter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
              .agg(F.sort_array(F.collect_set("bit")).alias("bits")))
     li = load_table(spark, sf_dir, "lineitem")
     pos = _bloom_positions(F.col("l_suppkey"))
-    survivors = (li.join(F.broadcast(bloom))
+    survivors = (li.join(bloom)
                  .filter(F.array_contains("bits", pos[0])
                          & F.array_contains("bits", pos[1]))
                  .drop("bits"))
-    exact = survivors.join(F.broadcast(sup),
+    exact = survivors.join(sup,
                            F.col("l_suppkey") == F.col("s_suppkey"),
                            "left_semi")
     return (exact.groupBy("l_suppkey")
@@ -466,8 +467,8 @@ def bloom_fp_rate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = (load_table(spark, sf_dir, "lineitem")
               .select(F.col("l_suppkey").alias("key")).distinct())
     nonmember = probes.join(
-        F.broadcast(sup), probes.key == F.col("s_suppkey"), "left_anti")
-    passed = (nonmember.join(F.broadcast(bits))
+        sup, probes.key == F.col("s_suppkey"), "left_anti")
+    passed = (nonmember.join(bits)
               .select(F.when(
                   F.array_contains(
                       "bits", _bloom_md5_pos(F.col("key"), 1))
@@ -478,9 +479,9 @@ def bloom_fp_rate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.sum("hit").alias("n_false_positives")))
     load = F.col("n_bits_set") / F.lit(float(BLOOM_M))
     return (passed
-            .crossJoin(F.broadcast(n_keys))
-            .crossJoin(F.broadcast(
-                bits.select(F.size("bits").alias("n_bits_set"))))
+            .crossJoin(n_keys)
+            .crossJoin(
+                bits.select(F.size("bits").alias("n_bits_set")))
             .select(
                 "n_keys",
                 F.lit(BLOOM_M).alias("m_bits"),

@@ -56,7 +56,7 @@ def zorder_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = base.agg(
         F.min("u").alias("umin"), F.max("u").alias("umax"),
         F.min("h").alias("hmin"), F.max("h").alias("hmax"))
-    scaled = base.crossJoin(F.broadcast(stats)).select(
+    scaled = base.crossJoin(stats).select(
         F.expr(f"((u - umin) * {Z_SIDE - 1}) div "
                "greatest(umax - umin, 1)").alias("su"),
         F.expr(f"((h - hmin) * {Z_SIDE - 1}) div "

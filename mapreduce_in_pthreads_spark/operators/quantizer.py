@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ..functions.lineage import truncate_lineage
 from ..functions.vectors import dot, l2_norm
+from ..sources.constants import constant_table
 from ..sources.tables import load_embeddings_parallel, load_table
 
 # Coarse-cell count scales with the corpus: K = clamp(n // KM_TARGET_CELL,
@@ -965,8 +966,8 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     acc += (qq - cc) * (qq - cc)
                 lut[m * PQ_K + cell] = acc
         lut_rows.append((int(r.vec_id), lut))
-    lut_df = spark.createDataFrame(
-        lut_rows, "query_id bigint, lut map<bigint,double>")
+    lut_df = constant_table(
+        spark, lut_rows, "query_id bigint, lut map<bigint,double>")
 
     adc = F.aggregate(
         F.transform(
@@ -978,7 +979,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist").asc(), F.col("vec_id"))
     return (
-        enc.crossJoin(F.broadcast(lut_df))
+        enc.crossJoin(lut_df)
         .filter(F.col("vec_id") != F.col("query_id"))
         .withColumn("adc_dist", adc)
         .withColumn("rank", F.row_number().over(w).cast("bigint"))
@@ -1105,8 +1106,8 @@ def ann_ivf_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # dim-sequential fold + (dist, cell) tie-break as the
         # expression path) instead of a K_total-literal plan.
         probe_rows = _imi_probe_rows(coded, cents_final)
-        probes_df = coded.sparkSession.createDataFrame(
-            probe_rows, "query_id long, probe_cell int")
+        probes_df = constant_table(
+            coded.sparkSession, probe_rows, "query_id long, probe_cell int")
         q = (coded.filter(F.col("vec_id") < N_QUERIES)
              .select(F.col("vec_id").alias("query_id"),
                      F.col("embedding").alias("query_emb"),
@@ -1234,7 +1235,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
              .agg(F.sum(F.col("m") * F.col("v")).alias("w")))
         mx = w.agg(F.max(F.abs("w")).alias("mx"))
         v = truncate_lineage(
-            w.join(F.broadcast(mx))
+            w.join(mx)
             .select(F.col("i").alias("j"),
                     F.round(F.col("w").cast("double")
                             / F.col("mx").cast("double")
@@ -1246,11 +1247,11 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                                        F.col("v").alias("vi"))), "i")
             .agg(F.sum(F.col("m") * F.col("v") * F.col("vi"))
                  .alias("vtmv")))
-    eig = (norm2.join(F.broadcast(vtmv))
+    eig = (norm2.join(vtmv)
            .select(F.round(F.col("vtmv").cast("double")
                            / F.col("n2").cast("double"), 6)
                    .alias("eigenvalue")))
-    return (v.join(F.broadcast(norm2)).join(F.broadcast(eig))
+    return (v.join(norm2).join(eig)
             .select(F.col("j").cast("bigint").alias("dim"),
                     F.round(F.col("v").cast("double")
                             / F.sqrt(F.col("n2").cast("double")), 6)
@@ -1532,7 +1533,8 @@ def kcenter_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     members = nearest.groupBy("seed_rank").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.max("d").cast("bigint").alias("radius_sq"))
-    trace = spark.createDataFrame(
+    trace = constant_table(
+        spark,
         [(i + 1, sid, d) for i, (sid, _, d) in enumerate(seeds)],
         "seed_rank int, vec_id bigint, picked_dist_sq bigint")
     return (trace.join(members, "seed_rank")
@@ -1631,7 +1633,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.sum(F.col("s") * F.col("g")).alias("dot"),
                 F.sum(F.col("s") * F.col("s")).alias("n2l")))
     return (per.join(F.broadcast(nl), "label")
-            .crossJoin(F.broadcast(n2g))
+            .crossJoin(n2g)
             .select(F.col("label").cast("bigint").alias("label"),
                     "n_vecs",
                     F.round(F.col("dot")
@@ -1686,28 +1688,28 @@ def ctfidf_cluster_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     round(·,10)-pinned before the tf multiply; one final round 6.
     Ranking ties break on word.
 
-    Scale: docs join the broadcast cell assignment (vec-count-sized id
-    pairs, not text); one combinable (cell, word) aggregation; the idf
-    side is a vocab-sized relation; top-k is a per-cell window.
+    Scale: docs join the cell assignment (vec-count-sized id pairs, not
+    text); one combinable (cell, word) aggregation; the corpus term
+    frequency is a word-keyed window over it, so the vocab-sized idf
+    never joins back; top-k is a per-cell window.
     """
     coded, _, cents_final, _ = _train(spark, sf_dir)
     assigned = _assign(coded, cents_final).select("vec_id", "cell")
     docs = load_table(spark, sf_dir, "documents")
-    tok = (docs.join(F.broadcast(assigned),
+    tok = (docs.join(assigned,
                      docs.doc_id == assigned.vec_id)
            .select("cell", F.explode(F.split("text", " ")).alias("word")))
     tf = truncate_lineage(
         tok.groupBy("cell", "word").agg(F.count(F.lit(1)).alias("tf")))
-    corpus_tf = tf.groupBy("word").agg(F.sum("tf").alias("ctf"))
     avg_mass = (tf.groupBy("cell").agg(F.sum("tf").alias("mass"))
                 .agg((F.sum("mass") / F.count(F.lit(1)))
                      .alias("a")))
-    idf = (corpus_tf.crossJoin(F.broadcast(avg_mass))
-           .select("word",
-                   F.round(F.log(F.lit(1.0)
-                                 + F.col("a") / F.col("ctf")), 10)
-                   .cast("decimal(25,10)").alias("idf")))
-    scored = (tf.join(F.broadcast(idf), "word")
+    idf = (F.round(F.log(F.lit(1.0) + F.col("a") / F.col("ctf")), 10)
+           .cast("decimal(25,10)"))
+    scored = (tf.withColumn("ctf", F.sum("tf").over(
+                  Window.partitionBy("word")))
+              .crossJoin(avg_mass)
+              .withColumn("idf", idf)
               .select("cell", "word",
                       F.round(F.col("tf")
                               * F.col("idf").cast("double"), 6)
@@ -1785,7 +1787,8 @@ def kmeans_coreset_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.sum(F.element_at(F.col("codes"), d + 1)).alias(f"s{d}")
           for d in range(KM_D)])
     ).collect()  # K rows x (D+1) scalars — the _train-proven collect
-    cells = spark.createDataFrame(
+    cells = constant_table(
+        spark,
         [(int(r["cell"]), int(r["m"]),
           [int(r[f"s{d}"]) for d in range(KM_D)]) for r in stats],
         "cell int, m long, s array<long>")
@@ -1794,7 +1797,7 @@ def kmeans_coreset_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                    lambda x, s: (F.col("m") * x - s)
                    * (F.col("m") * x - s)),
         F.lit(0).cast("long"), lambda acc, x: acc + x)
-    per_cell = (assign.join(F.broadcast(cells), "cell")
+    per_cell = (assign.join(cells, "cell")
                 .select("cell", "m", d2m2.alias("d2m2"))
                 .groupBy("cell", "m")
                 .agg(F.count(F.lit(1)).alias("n_vecs"),

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.lineage import truncate_lineage
 from ..functions.vectors import dot, l2_norm
+from ..sources.constants import constant_table
 from ..sources.tables import load_embeddings_parallel, load_table
 
 N_QUERIES = 10   # vec_id < 10 serve as the query set
@@ -488,8 +489,8 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("method", "query_id")
             .agg(F.sum(F.coalesce("in_bf", F.lit(0))).alias("n_hits")))
     grid = (bf.select("query_id").distinct()
-            .crossJoin(F.broadcast(spark.createDataFrame(
-                [(m,) for m in sorted(methods)], "method string"))))
+            .crossJoin(constant_table(
+                spark, [(m,) for m in sorted(methods)], "method string")))
     return (grid.join(hits, ["method", "query_id"], "left")
             .select("method", "query_id",
                     F.coalesce("n_hits", F.lit(0)).cast("bigint")
@@ -698,13 +699,13 @@ def embedding_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint").alias("n_bad_value"),
         F.sum(F.when(F.col("norm") == 0.0, 1).otherwise(0))
         .cast("bigint").alias("n_zero_norm"))
-    outliers = (valid.crossJoin(F.broadcast(stats))
+    outliers = (valid.crossJoin(stats)
                 .agg(F.sum(F.when(
                     (F.col("norm") * 2 < F.col("median_norm"))
                     | (F.col("norm") > F.col("median_norm") * 2),
                     1).otherwise(0)).cast("bigint").alias("n_outliers")))
-    return (counts.crossJoin(F.broadcast(stats))
-            .crossJoin(F.broadcast(outliers))
+    return (counts.crossJoin(stats)
+            .crossJoin(outliers)
             .select("n_vecs", "n_bad_dim", "n_bad_value", "n_zero_norm",
                     F.round("p05_norm", 6).alias("p05_norm"),
                     F.round("median_norm", 6).alias("median_norm"),

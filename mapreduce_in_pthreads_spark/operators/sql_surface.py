@@ -37,7 +37,7 @@ def ordered_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_acctbal") > 9000)
-    nation = F.broadcast(load_table(spark, sf_dir, "nation"))
+    nation = load_table(spark, sf_dir, "nation")
     joined = cust.join(nation,
                        cust.c_nationkey == nation.n_nationkey)
     return (joined.groupBy("n_name")

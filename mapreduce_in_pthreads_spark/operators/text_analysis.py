@@ -17,6 +17,7 @@ from ..functions.lineage import truncate_lineage
 from ..functions.numeric import davg, sql_davg
 from ..functions.tokens import adjacent_bigrams, adjacent_pairs, \
     sliding_ngrams
+from ..sources.constants import constant_table
 from ..sources.tables import load_embeddings_parallel, load_table
 
 # "BPE-ish" tokenizer: letter runs, digit runs, single other non-space
@@ -102,16 +103,18 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 dp BEFORE ranking on both engines (libm ulp-divergence guard);
     ties broken by word.
 
-    Document frequency is an aggregate over ``word`` broadcast-joined
-    back onto tf (r11, guide §2.4/§3.1). The r10 window formulation
-    (``count() OVER (PARTITION BY word)``) re-shuffled AND re-sorted
-    the FULL tf relation by word before the rank window shuffled it a
-    third time by doc_id — 3 full-tf exchanges + 2 full-tf sorts. The
-    aggregate shuffles only per-partition partial (word, count) rows
-    (vocabulary-sized, Zipf-sublinear in the corpus), and the broadcast
-    join attaches df with no exchange or sort of tf at all: 2 full-tf
-    exchanges + 1 sort. df values are identical either way — tf has
-    exactly one row per (doc, word), so count rows per word IS df."""
+    Document frequency is an aggregate over ``word`` joined back onto
+    tf. A window formulation (``count() OVER (PARTITION BY word)``)
+    re-shuffles AND re-sorts the FULL tf relation by word before the
+    rank window shuffles it a third time by doc_id. The aggregate
+    shuffles only per-partition partial (word, count) rows
+    (vocabulary-sized, Zipf-sublinear in the corpus). The df relation
+    is per-word, so its join strategy is the planner's: while df fits
+    the session's broadcast threshold the join attaches it with no
+    exchange of tf, and past it the join shuffles instead of shipping
+    a vocabulary to every executor. df values are identical either
+    way — tf has exactly one row per (doc, word), so count rows per
+    word IS df."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word"))
@@ -138,8 +141,8 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     df_rel = tf.groupBy("word").agg(
         F.sum(F.when(F.col("tf") >= 1, F.lit(1))).alias("df"))
     scored = (
-        tf.join(F.broadcast(df_rel), "word")
-        .crossJoin(F.broadcast(n_docs))
+        tf.join(df_rel, "word")
+        .crossJoin(n_docs)
         .withColumn("tfidf",
                     F.round(F.col("tf") * F.log(F.col("n") / F.col("df")), 6))
     )
@@ -449,7 +452,7 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .select("ngram").distinct())
     train = with_grams.filter(F.col("doc_id") % EVAL_MOD != 0)
     return (
-        train.join(F.broadcast(eval_grams), "ngram")
+        train.join(eval_grams, "ngram")
         .groupBy("doc_id")
         .agg(F.countDistinct("ngram").alias("n_contaminated_ngrams"))
     )
@@ -613,7 +616,8 @@ def bigram_logprob_interpolated(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the LM is one combinable (v,w) aggregation (vocab²-bounded
     — a 100 TB corpus still has a bounded vocabulary) re-joined
     against doc bigram occurrences; prefix totals and the unigram
-    model attach by broadcast; one combinable per-doc sum. No windows,
+    model attach by equi-join (broadcast while they fit the session
+    threshold); one combinable per-doc sum. No windows,
     no self-joins.
     """
     docs = load_table(spark, sf_dir, "documents")
@@ -632,14 +636,14 @@ def bigram_logprob_interpolated(spark: SparkSession, sf_dir: str) -> DataFrame:
              + F.lit(1.0 - BIGRAM_LAMBDA)
              * (F.col("c1").cast("double") / F.col("total_tokens")))
     scored = (
-        lm2.join(F.broadcast(pref), "v")
-        .join(F.broadcast(lm1), "w")
-        .join(F.broadcast(total))
+        lm2.join(pref, "v")
+        .join(lm1, "w")
+        .join(total)
         .select("v", "w",
                 F.round(F.log(mixed), 10).cast("decimal(25,10)")
                 .alias("logp")))
     per_doc = (
-        bg.join(F.broadcast(scored), ["v", "w"])
+        bg.join(scored, ["v", "w"])
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_bigrams"),
              F.sum("logp").alias("lp_sum")))
@@ -807,7 +811,7 @@ def unigram_logprob_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = lm.agg(F.sum("cnt").alias("total_tokens"))
     p_w = F.col("cnt").cast("double") / F.col("total_tokens")
     scored_vocab = (
-        lm.join(F.broadcast(total))
+        lm.join(total)
         .select("word",
                 F.round(F.log(p_w), 10).cast("decimal(25,10)")
                 .alias("logp")))
@@ -903,7 +907,7 @@ def _bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * (F.col("tf") * F.lit(BM25_K1 + 1.0)) / denom, 10)
         .cast("decimal(25,10)"))
     return (
-        tf.join(F.broadcast(df_.join(F.broadcast(stats))
+        tf.join(F.broadcast(df_.join(stats)
                             .select("word", idf_dec.alias("idf"),
                                     "n_docs", "total_dl")), "word")
         .join(dl, "doc_id")
@@ -911,8 +915,7 @@ def _bm25_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bm25_queries_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        list(BM25_QUERIES), "query_id bigint, word string")
+    return constant_table(spark, BM25_QUERIES, "query_id bigint, word string")
 
 
 def _bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -921,7 +924,7 @@ def _bm25_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ``dl`` the fusion ranker needs. Candidates = docs containing
     ≥ 1 query term (identical for every ranker built on top)."""
     scored = (_bm25_doc_scores(spark, sf_dir)
-              .join(F.broadcast(_bm25_queries_df(spark)), "word")
+              .join(_bm25_queries_df(spark), "word")
               .select("query_id", "doc_id", "s", "tf", "dl"))
     return scored.groupBy("query_id", "doc_id").agg(
         F.sum("s").alias("score_sum"),
@@ -947,7 +950,7 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: term frequencies for QUERY TERMS ONLY (the explode filters
     to the tiny term set before any shuffle — at 100 TB the scan is
     the cost, which an inverted-index table or bloom pushdown would
-    prune); df/N/avgdl are vocab- and 1-row-sized broadcasts; the
+    prune); df/N/avgdl are query-term- and 1-row-sized broadcasts; the
     top-k is a per-query window, never a global sort.
     """
     per_doc = _bm25_per_doc(spark, sf_dir)
@@ -1090,7 +1093,7 @@ def wand_upper_bound_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums; the prune test is a decimal comparison; ``prune_frac`` is
     one pinned double division of exact ints.
 
-    Scale: upper bounds are a vocab-sized combinable agg broadcast
+    Scale: upper bounds are a query-term-sized combinable agg broadcast
     back into the SAME (query, doc, term) relation that scoring uses
     — everything reduces in ONE (query_id, doc_id) aggregation; θ is
     a per-query window over candidates; lineage is cut at the scored
@@ -1101,7 +1104,7 @@ def wand_upper_bound_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     ds = truncate_lineage(_bm25_doc_scores(spark, sf_dir))
     ub = ds.groupBy("word").agg(F.max("s").alias("ub"))
     per = truncate_lineage(
-        ds.join(F.broadcast(_bm25_queries_df(spark)), "word")
+        ds.join(_bm25_queries_df(spark), "word")
         .join(F.broadcast(ub), "word")
         .groupBy("query_id", "doc_id")
         .agg(F.sum("s").alias("score_sum"),
@@ -1535,11 +1538,10 @@ def query_likelihood_dirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-term ln is round(·,10)-pinned to DECIMAL(25,10) before the
     per-(query, doc) sum (the ``token_entropy`` trick).
 
-    Scale: cf/total live in a vocab-sized broadcast filtered to query
-    terms; the grid is |candidates|×|terms| — candidate lists are df-
-    bounded exactly like BM25's postings; one combinable aggregation
-    per (query, doc); top-k is a per-query window, never a global
-    sort.
+    Scale: cf/total live in a broadcast filtered to query terms; the
+    grid is |candidates|×|terms| — candidate lists are df-bounded
+    exactly like BM25's postings; one combinable aggregation per
+    (query, doc); top-k is a per-query window, never a global sort.
     """
     per_doc = _ql_per_doc(spark, sf_dir)
     w = Window.partitionBy("query_id").orderBy(
@@ -1570,11 +1572,10 @@ def _ql_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = (tok.filter(F.col("word").isin(terms))
           .groupBy("doc_id", "word")
           .agg(F.count(F.lit(1)).alias("tf")))
-    qdf = spark.createDataFrame(
-        list(BM25_QUERIES), "query_id bigint, word string")
-    cands = (tf.join(F.broadcast(qdf), "word")
+    qdf = _bm25_queries_df(spark)
+    cands = (tf.join(qdf, "word")
              .select("query_id", "doc_id").distinct())
-    grid = cands.join(F.broadcast(qdf), "query_id")
+    grid = cands.join(qdf, "query_id")
     p_bg = F.lit(QL_MU) * (F.col("cf").cast("double")
                            / F.col("total_tokens"))
     logp = (
@@ -1583,7 +1584,7 @@ def _ql_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(25,10)"))
     scored = (
         grid.join(tf, ["doc_id", "word"], "left")
-        .join(F.broadcast(cf.join(F.broadcast(total))), "word")
+        .join(F.broadcast(cf.join(total)), "word")
         .join(dl, "doc_id")
         .select("query_id", "doc_id", logp.alias("logp")))
     return scored.groupBy("query_id", "doc_id").agg(
@@ -1677,21 +1678,20 @@ def rocchio_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     dfs = tok.distinct().groupBy("word").agg(
         F.count(F.lit(1)).alias("df"))
     idf = (
-        dfs.join(F.broadcast(n_docs))
+        dfs.join(n_docs)
         .select("word",
                 F.round(F.log((F.col("n_docs") + F.lit(1.0))
                               / (F.col("df") + F.lit(1.0))), 10)
                 .cast("decimal(25,10)").alias("idf")))
-    qdf = spark.createDataFrame(
-        list(BM25_QUERIES), "query_id bigint, word string")
+    qdf = _bm25_queries_df(spark)
     weights = (
         tok.join(F.broadcast(rel), "doc_id")
         .groupBy("query_id", "word")
         .agg(F.count(F.lit(1)).alias("tf_sum"))
-        .join(F.broadcast(qdf.withColumn("is_q", F.lit(1))),
+        .join(qdf.withColumn("is_q", F.lit(1)),
               ["query_id", "word"], "left")
         .filter(F.col("is_q").isNull())
-        .join(F.broadcast(idf), "word")
+        .join(idf, "word")
         .select("query_id", "word",
                 (F.col("tf_sum") * F.col("idf")).alias("w")))
     we = Window.partitionBy("query_id").orderBy(
@@ -1987,7 +1987,8 @@ def skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits ``SKIP_WINDOW`` shifted (doc, pos+d) keys, turning the
     positional range join into a pure equi-join on (doc_id, pos)
     (the ``count_min_words`` cell trick); pair counts are combinable;
-    the unigram/total sides are vocabulary-sized broadcasts.
+    the unigram sides are vocabulary-sized equi-joins whose strategy
+    the planner picks; the totals are 1-row relations.
 
     Exactness: all counts integer; the PMI ratio is fixed-order
     correctly-rounded double ops into one ln, rounded to 6 dp (the
@@ -2016,11 +2017,11 @@ def skipgram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_b = F.col("cb").cast("double") / F.col("n_tokens").cast("double")
     return (
         cab.filter(F.col("c_ab") >= SKIP_MIN_COUNT)
-        .join(F.broadcast(uni.select(F.col("word").alias("wa"),
-                                     F.col("c").alias("ca"))), "wa")
-        .join(F.broadcast(uni.select(F.col("word").alias("wb"),
-                                     F.col("c").alias("cb"))), "wb")
-        .join(F.broadcast(tot)).join(F.broadcast(n))
+        .join(uni.select(F.col("word").alias("wa"),
+                         F.col("c").alias("ca")), "wa")
+        .join(uni.select(F.col("word").alias("wb"),
+                         F.col("c").alias("cb")), "wb")
+        .join(tot).join(n)
         .select("wa", "wb", "c_ab",
                 F.round(F.log(p_ab / (p_a * p_b)), 6).alias("pmi")))
 
@@ -2218,16 +2219,16 @@ def boolean_search(spark: SparkSession, sf_dir: str) -> DataFrame:
              for t in must]
     terms += [(qid, t, 0, 1) for qid, _, nots in BOOLEAN_QUERIES
               for t in nots]
-    tdf = spark.createDataFrame(
-        terms, "query_id string, word string, is_must int, is_not int")
+    tdf = constant_table(
+        spark, terms, "query_id string, word string, is_must int, is_not int")
     need = {qid: len(must) for qid, must, _ in BOOLEAN_QUERIES}
-    need_df = spark.createDataFrame(
-        list(need.items()), "query_id string, n_must int")
-    hits = (postings.join(F.broadcast(tdf), "word")
+    need_df = constant_table(
+        spark, list(need.items()), "query_id string, n_must int")
+    hits = (postings.join(tdf, "word")
             .groupBy("query_id", "doc_id")
             .agg(F.sum("is_must").alias("n_hit"),
                  F.sum("is_not").alias("n_neg")))
-    return (hits.join(F.broadcast(need_df), "query_id")
+    return (hits.join(need_df, "query_id")
             .filter((F.col("n_hit") == F.col("n_must"))
                     & (F.col("n_neg") == 0))
             .select("query_id", "doc_id"))
@@ -2281,8 +2282,8 @@ def chi2_discriminative_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-scale the counts.
 
     Scale: presence = distinct (doc, word), one combinable count per
-    (lang, word), one broadcast of the |langs|-row and |words|-row
-    margins. No per-doc state.
+    (lang, word), a broadcast of the |langs|-row margin and a
+    planner-chosen join of the |words|-row margin. No per-doc state.
     """
     docs = load_table(spark, sf_dir, "documents")
     presence = (docs.select(
@@ -2297,8 +2298,8 @@ def chi2_discriminative_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = docs.agg(F.count(F.lit(1)).alias("n")) 
     dec = "decimal(38,0)"
     full = (lw.join(F.broadcast(lang_tot), "lang")
-            .join(F.broadcast(word_tot), "word")
-            .crossJoin(F.broadcast(n_docs))
+            .join(word_tot, "word")
+            .crossJoin(n_docs)
             .withColumn("b", F.col("n_lang") - F.col("a"))
             .withColumn("c", F.col("n_word") - F.col("a"))
             .withColumn("d", F.col("n") - F.col("n_lang")
@@ -2621,7 +2622,7 @@ def related_docs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarded = truncate_lineage(
         tf.withColumn("df", F.count(F.lit(1)).over(
             Window.partitionBy("word")))
-        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(n_docs)
         .filter((F.col("df") >= RELATED_MIN_DF)
                 & (F.col("df") * 10
                    <= F.col("n_docs") * RELATED_MAX_DF_PCT10))
@@ -2837,7 +2838,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(idx).cast("bigint").alias("merge_idx"),
             "left", "right", "pair_count"))
         state = truncate_lineage(
-            state.join(F.broadcast(top))
+            state.join(top)
             .select(_bpe_apply_merge(F.col("seq"), F.col("left"),
                                      F.col("right")).alias("seq"),
                     "wf"))
@@ -2936,7 +2937,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                                             Window.currentRow))))
     return (ranked
             .filter(F.col("vocab_size").isin(*VOCAB_CUTOFFS))
-            .crossJoin(F.broadcast(total))
+            .crossJoin(total)
             .select("vocab_size", "cum_tokens", "total_tokens",
                     F.round(F.col("cum_tokens").cast("double")
                             / F.col("total_tokens"), 6)
@@ -2976,13 +2977,12 @@ def bpe_apply_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sennrich et al. 2016 §5).
 
     Spark-first: training state is VOCAB-sized (word → current
-    segmentation, word kept as the join key), re-derived with the
-    same argmax-broadcast rounds as ``bpe_train_merges``; encoding is
-    then a broadcast join of corpus tokens against the final
-    segmentation — token count per occurrence = subword count of its
-    word type (single-char words segment to themselves: the left-join
-    coalesce to 1). No per-document string surgery: the corpus-sized
-    pass is one explode + one combinable aggregation.
+    segmentation), re-derived with the same argmax rounds as
+    ``bpe_train_merges``; each round's winning rule is one collected
+    row. Encoding applies the learned rules to every corpus token as
+    literal string expressions, so the corpus-sized pass is one
+    explode + one combinable aggregation with no join against the
+    vocabulary (single-char words segment to themselves).
 
     Exactness: all counts are integer sums; the ratio is one
     correctly-rounded double division."""
@@ -2990,41 +2990,37 @@ def bpe_apply_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(F.explode(F.split("text", " ")).alias("word"))
     words = (tok.filter(F.length("word") >= 2)
              .groupBy("word").agg(F.count(F.lit(1)).alias("wf")))
-    chars = F.transform(
+    chars = F.concat_ws(" ", F.transform(
         F.sequence(F.lit(1), F.length("word")),
-        lambda i: F.col("word").substr(i, F.lit(1)))
-    state = truncate_lineage(
-        words.select("word", F.concat_ws(" ", chars).alias("seq"), "wf"))
+        lambda i: F.col("word").substr(i, F.lit(1))))
+    state = truncate_lineage(words.select(chars.alias("seq"), "wf"))
+    rules = []
     for _ in range(BPE_TRAIN_MERGES):
         syms = F.split("seq", " ")
         pair_col = F.transform(
             F.sequence(F.lit(1), F.size(syms) - 1),
             lambda i: F.concat(F.element_at(syms, i), F.lit(" "),
                                F.element_at(syms, i + 1)))
-        pc = (state.filter(F.size(syms) >= 2)
-              .select(F.explode(pair_col).alias("pair"), "wf")
-              .groupBy("pair").agg(F.sum("wf").alias("pair_count")))
-        top = truncate_lineage(
-            pc.orderBy(F.col("pair_count").desc(), "pair").limit(1)
-            .select(F.substring_index("pair", " ", 1).alias("left"),
-                    F.substring_index("pair", " ", -1).alias("right")))
-        state = truncate_lineage(
-            state.join(F.broadcast(top))
-            .select("word",
-                    _bpe_apply_merge(F.col("seq"), F.col("left"),
-                                     F.col("right")).alias("seq"),
-                    "wf"))
-    seg = state.select(
-        "word", F.size(F.split("seq", " ")).alias("n_sub"))
+        top = (state.filter(F.size(syms) >= 2)
+               .select(F.explode(pair_col).alias("pair"), "wf")
+               .groupBy("pair").agg(F.sum("wf").alias("pair_count"))
+               .orderBy(F.col("pair_count").desc(), "pair").first())
+        if top is None:  # every word is already one symbol
+            break
+        left, right = top.pair.split(" ")
+        rules.append((F.lit(left), F.lit(right)))
+        state = truncate_lineage(state.select(
+            _bpe_apply_merge(F.col("seq"), *rules[-1]).alias("seq"), "wf"))
+    seg = chars
+    for rule in rules:
+        seg = _bpe_apply_merge(seg, *rule)
     occ = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("word"))
     return (occ.filter(F.col("word") != "")
-            .join(F.broadcast(seg), "word", "left")
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_words"),
                  F.sum(F.length("word")).alias("n_chars"),
-                 F.sum(F.coalesce("n_sub", F.lit(1)))
-                 .alias("n_bpe_tokens"))
+                 F.sum(F.size(F.split(seg, " "))).alias("n_bpe_tokens"))
             .withColumn("chars_per_token",
                         F.round(F.col("n_chars")
                                 / F.col("n_bpe_tokens"), 10)))
@@ -3121,7 +3117,8 @@ def kneser_ney_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical plan family to the JM scorer — the LM is one
     combinable vocab²-bounded (v,w) aggregation; prefix totals,
-    continuation counts and the 1-row type total attach by broadcast;
+    continuation counts and the 1-row type total attach by equi-join
+    (broadcast while they fit the session threshold);
     one combinable per-doc sum. No windows, no self-joins.
     """
     docs = load_table(spark, sf_dir, "documents")
@@ -3140,14 +3137,14 @@ def kneser_ney_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.lit(KN_DISCOUNT) * F.col("n1v") / F.col("cv")
             * (F.col("n1w") / F.col("n1tot").cast("double")))
     scored = (
-        lm2.join(F.broadcast(pref), "v")
-        .join(F.broadcast(cont), "w")
-        .join(F.broadcast(types))
+        lm2.join(pref, "v")
+        .join(cont, "w")
+        .join(types)
         .select("v", "w",
                 F.round(F.log(p_kn), 10).cast("decimal(25,10)")
                 .alias("logp")))
     return (
-        bg.join(F.broadcast(scored), ["v", "w"])
+        bg.join(scored, ["v", "w"])
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_bigrams"),
              F.sum("logp").alias("lp_sum"))
@@ -3729,10 +3726,10 @@ def heldout_bigram_perplexity(spark: SparkSession,
     — exp is libm).
 
     Scale: LMs are combinable aggregations over the TRAIN split
-    (vocab/vocab²-bounded) attached by broadcast; the held-out side
-    is one scan + per-lang combinable sum. The identical shape at
-    100 TB: train-split statistics become the broadcast model,
-    held-out scoring stays embarrassingly parallel.
+    (vocab/vocab²-bounded) attached by equi-join; the held-out side
+    is one scan + per-lang combinable sum. The planner broadcasts the
+    model while it fits the session threshold and shuffles it past
+    that; held-out scoring stays embarrassingly parallel.
     """
     docs = load_table(spark, sf_dir, "documents")
     is_train = (F.substring(
@@ -3765,10 +3762,10 @@ def heldout_bigram_perplexity(spark: SparkSession,
         * ((F.coalesce(F.col("c1"), F.lit(0)) + 1).cast("double")
            / (F.col("n_train_tokens") + F.col("v_train") + 1)))
     scored = (test_bg
-              .join(F.broadcast(lm2), ["v", "w"], "left")
-              .join(F.broadcast(pref), "v", "left")
-              .join(F.broadcast(lm1), "w", "left")
-              .join(F.broadcast(tot))
+              .join(lm2, ["v", "w"], "left")
+              .join(pref, "v", "left")
+              .join(lm1, "w", "left")
+              .join(tot)
               .select("doc_id", "lang",
                       F.round(F.log(mixed), 10).cast("decimal(25,10)")
                       .alias("logp")))
@@ -3880,7 +3877,7 @@ def word_burstiness_adaptation(spark: SparkSession,
     lam = F.col("tf_total") / F.col("n_docs")
     e = F.exp(-lam)
     pred = (1 - e - lam * e) / (1 - e)
-    return (per_term.crossJoin(F.broadcast(n_docs))
+    return (per_term.crossJoin(n_docs)
             .select("w", "df", "df2", "tf_total",
                     F.round(F.col("df2") / F.col("df"), 10)
                     .alias("adaptation_measured"),
@@ -4188,8 +4185,8 @@ def good_turing_discounts(spark: SparkSession, sf_dir: str) -> DataFrame:
     r_star = (((F.col("r") + F.lit(1)) * n_next).cast("double")
               / F.col("n_r").cast("double"))
     return (fof.filter(F.col("r") <= GT_MAX_R)
-            .join(F.broadcast(nxt), "r", "left")
-            .crossJoin(F.broadcast(total))
+            .join(nxt, "r", "left")
+            .crossJoin(total)
             .select(F.col("r").cast("bigint").alias("r"),
                     "n_r",
                     n_next.cast("bigint").alias("n_next"),
@@ -4266,7 +4263,7 @@ def negative_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                           F.sum("c").alias("n_tokens"))
     p_uni = F.col("c").cast("double") / F.col("n_tokens").cast("double")
     p_neg = (F.col("w").cast("double") / F.col("z").cast("double"))
-    return (weighted.crossJoin(F.broadcast(totals))
+    return (weighted.crossJoin(totals)
             .select("word", "c",
                     F.col("w").cast("double").alias("damped_weight"),
                     p_uni.alias("p_unigram"),

@@ -450,8 +450,8 @@ def hll_sketch_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     overall = (sketches.agg(
         F.lit("ALL").alias("event_type"),
         F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est"))
-        .crossJoin(F.broadcast(
-            ev.agg(F.countDistinct("user_id").alias("exact_users"))))
+        .crossJoin(
+            ev.agg(F.countDistinct("user_id").alias("exact_users")))
         .select("event_type", "exact_users", "est"))
     rel = (F.abs(F.col("est").cast("double")
                  - F.col("exact_users").cast("double"))
@@ -1208,7 +1208,7 @@ def assoc_rules_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(per_type.withColumnRenamed(
                 "event_type", "consequent")
                 .withColumnRenamed("n_type", "n_cons")), "consequent")
-            .crossJoin(F.broadcast(n_users))
+            .crossJoin(n_users)
             .select(
                 "antecedent", "consequent", "n_both",
                 F.round(F.col("n_both") / F.col("n_users"), 6)
@@ -1663,8 +1663,8 @@ def time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = conv.agg(
         F.count(F.lit(1)).alias("n_viewed"),
         F.count("delta_us").alias("n_converted"))
-    return (totals.crossJoin(F.broadcast(med))
-            .crossJoin(F.broadcast(p90))
+    return (totals.crossJoin(med)
+            .crossJoin(p90)
             .select("n_viewed", "n_converted",
                     F.round(F.col("n_converted").cast("double")
                             / F.col("n_viewed"), 6).alias("cvr"),
@@ -2248,7 +2248,7 @@ def dense_hourly(counts: DataFrame) -> DataFrame:
     relation; the grid is manifest-sized (|types| × |hours|)."""
     bounds = counts.agg(F.min("h").alias("hmin"), F.max("h").alias("hmax"))
     types = counts.select("event_type").distinct()
-    grid = (types.crossJoin(F.broadcast(bounds))
+    grid = (types.crossJoin(bounds)
             .select("event_type", "hmax",
                     F.explode(F.sequence("hmin", "hmax")).alias("h")))
     return (grid.join(counts, ["event_type", "h"], "left")
@@ -2707,7 +2707,7 @@ def markov_temporal_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("event_type").alias("w")))
     bounds = ev.agg(F.min(F.expr("unix_micros(ts) div 86400000000"))
                     .alias("dmin"))
-    t2 = (trans.crossJoin(F.broadcast(bounds))
+    t2 = (trans.crossJoin(bounds)
           .select("v", "w",
                   (F.col("day") < F.col("dmin")
                    + F.lit(TEMPORAL_TRAIN_DAYS)).alias("is_train")))
@@ -3035,7 +3035,7 @@ def _censored_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon = ev.agg(F.max("ts").alias("horizon"))
     return (per_user.filter(F.col("first_view").isNotNull())
             .join(first_purch, "user_id", "left")
-            .crossJoin(F.broadcast(horizon))
+            .crossJoin(horizon)
             .select(
                 "user_id",
                 (F.when(F.col("first_purchase").isNotNull(),
@@ -3111,7 +3111,7 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy("h")
     before = w.rowsBetween(Window.unboundedPreceding, -1)
     upto = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    risk = (lt.crossJoin(F.broadcast(total))
+    risk = (lt.crossJoin(total)
             .withColumn("n_risk",
                         F.col("n_total")
                         - F.coalesce(F.sum(F.col("d") + F.col("c"))
@@ -3206,7 +3206,7 @@ def logrank_conversion_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = lt.agg(F.sum(F.col("d1") + F.col("c1")).alias("t1"),
                  F.sum(F.col("d2") + F.col("c2")).alias("t2"))
     w = Window.orderBy("h").rowsBetween(Window.unboundedPreceding, -1)
-    risk = (lt.crossJoin(F.broadcast(tot))
+    risk = (lt.crossJoin(tot)
             .withColumn("n1", F.col("t1")
                         - F.coalesce(F.sum(F.col("d1") + F.col("c1"))
                                      .over(w), F.lit(0)))
@@ -3229,7 +3229,7 @@ def logrank_conversion_arms(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum("e1").cast("double").alias("e_a"),
                     F.sum("v").cast("double").alias("var_a"))
     z = (F.col("o_a").cast("double") - F.col("e_a")) / F.sqrt("var_a")
-    return (agg.crossJoin(F.broadcast(tot))
+    return (agg.crossJoin(tot)
             .select(F.col("t1").alias("n_users_a"),
                     F.col("t2").alias("n_users_b"),
                     "o_a", F.round("e_a", 6).alias("e_a"),
@@ -3633,7 +3633,7 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy("h")
     before = w.rowsBetween(Window.unboundedPreceding, -1)
     upto = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    risk = (lt.crossJoin(F.broadcast(total))
+    risk = (lt.crossJoin(total)
             .withColumn("n_risk",
                         F.col("n_total")
                         - F.coalesce(F.sum(F.col("d") + F.col("c"))

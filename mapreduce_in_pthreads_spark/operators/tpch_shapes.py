@@ -37,7 +37,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue_u = disc_rev_u()
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(msum(revenue_u, "revenue"))
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
@@ -74,7 +74,7 @@ def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-04-01")))
     p = load_table(spark, sf_dir, "part")
     revenue_u = disc_rev_u()  # r10: long fixed-point, bit-identical
-    joined = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+    joined = li.join(p, li.l_partkey == p.p_partkey)
     return joined.agg(
         (split_sum(F.when(F.col("p_type") == "PROMO", revenue_u)
                    .otherwise(F.lit(0)), 10 ** 4).cast("double")
@@ -108,7 +108,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
            .filter(F.col("total_qty") > 300))
     return (
         big.join(o, big.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .select("c_custkey", "c_name", "l_orderkey",
                 F.col("o_totalprice"), "total_qty")
     )
@@ -201,10 +201,10 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1")))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n1, F.col("s_nationkey") == F.col("s_nk"))
+        .join(n2, F.col("c_nationkey") == F.col("c_nk"))
         .filter(pair)
         .groupBy("supp_nation", "cust_nation",
                  F.year("l_shipdate").cast("bigint").alias("l_year"))
@@ -241,7 +241,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal",
                  F.col("n_name").alias("nation"))
         .agg(msum(revenue_u, "revenue"))
@@ -274,7 +274,7 @@ def q16_supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("p_size").isin(1, 4, 9, 16, 25, 36, 49))
     li = load_table(spark, sf_dir, "lineitem")
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .groupBy("p_brand", "p_type", F.col("p_size").cast("bigint").alias("p_size"))
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
     )
@@ -308,7 +308,7 @@ def q19_disjunctive_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         | ((F.col("p_brand") == "Brand#3") & (F.col("p_size").between(1, 30))
            & (F.col("l_quantity").between(20, 35))))
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .filter(branch)
         .agg(msum(revenue_u, "revenue"),
              F.count(F.lit(1)).alias("n_items"))

@@ -80,11 +80,11 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), (li.l_suppkey == s.s_suppkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(s, (li.l_suppkey == s.s_suppkey)
               & (c.c_nationkey == s.s_nationkey))
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(msum(_revenue_u(), "revenue"))
     )
@@ -125,13 +125,13 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev_u = _revenue_u()
     zero = F.lit(0)
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), c.c_nationkey == F.col("c_nk"))
-        .join(F.broadcast(r), F.col("n_regionkey") == r.r_regionkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n2), s.s_nationkey == F.col("s_nk"))
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n1, c.c_nationkey == F.col("c_nk"))
+        .join(r, F.col("n_regionkey") == r.r_regionkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(n2, s.s_nationkey == F.col("s_nk"))
         .groupBy(F.year("o_orderdate").cast("bigint").alias("o_year"))
         .agg(
             (split_sum(F.when(F.col("supp_nation") == "NATION_3", rev_u)
@@ -179,10 +179,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - money_scaled("p_retailprice")
                 * money_scaled("l_quantity"))
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"),
                  F.year("o_orderdate").cast("bigint").alias("o_year"))
         .agg(msum(amount_u, "sum_profit"))
@@ -216,15 +216,15 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     filtered = (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey))
+        li.join(s, li.l_suppkey == s.s_suppkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey))
     per_part = filtered.groupBy("l_partkey").agg(
         msum(_revenue_u(), "part_value"))
     total = filtered.agg(
         msum(_revenue_u(), "total_value"))
     return (
-        per_part.crossJoin(F.broadcast(total))
+        per_part.crossJoin(total)
         .filter(F.col("part_value") > F.col("total_value") * 0.001)
         .select("l_partkey", "part_value")
     )
@@ -320,9 +320,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                .agg(msum(_revenue_u(), "total_revenue")))
     top = revenue.agg(F.max("total_revenue").alias("max_revenue"))
     return (
-        revenue.crossJoin(F.broadcast(top))
+        revenue.crossJoin(top)
         .filter(F.col("total_revenue") == F.col("max_revenue"))
-        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
+        .join(s, F.col("l_suppkey") == s.s_suppkey)
         .select("s_suppkey", "s_name", "total_revenue")
     )
 
@@ -349,7 +349,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3")
     li = load_table(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_partkey")
-    joined = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+    joined = li.join(p, li.l_partkey == p.p_partkey)
     return (
         joined.withColumn("avg_qty", F.avg("l_quantity").over(w))
         .filter(F.col("l_quantity") < 0.5 * F.col("avg_qty"))
@@ -384,12 +384,12 @@ def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1997-01-01"))
         & (F.col("l_shipdate") < F.lit("1998-01-01")))
     heavy = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey, "left_semi")
+        li.join(p, li.l_partkey == p.p_partkey, "left_semi")
         .groupBy("l_suppkey", "l_partkey")
         .agg(F.sum("l_quantity").alias("qty"))
         .filter(F.col("qty") > 50))
     return (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey, "left_semi")
+        s.join(n, s.s_nationkey == n.n_nationkey, "left_semi")
         .join(heavy, F.col("s_suppkey") == heavy.l_suppkey, "left_semi")
         .select("s_suppkey", "s_name")
     )
@@ -432,7 +432,7 @@ def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         blame.groupBy("blamed_suppkey")
         .agg(F.count(F.lit(1)).alias("numwait"))
-        .join(F.broadcast(s), F.col("blamed_suppkey") == s.s_suppkey)
+        .join(s, F.col("blamed_suppkey") == s.s_suppkey)
         .select("s_name", "numwait")
         .orderBy(F.col("numwait").desc(), F.col("s_name"))
         .limit(20)
@@ -472,7 +472,7 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_bal = (c.filter(F.col("c_acctbal") > 0)
                .agg(davg("c_acctbal", "avg_bal")))
     return (
-        c.crossJoin(F.broadcast(avg_bal))
+        c.crossJoin(avg_bal)
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
         .join(o, c.c_custkey == o.o_custkey, "left_anti")
         .groupBy((F.col("c_nationkey") % 5).cast("bigint")
@@ -501,19 +501,23 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery). No partsupp table, so 'cost of part from supplier' is
     the min line price observed per (part, EUROPE-supplier) pair; the
     per-part minimum selects the winning supplier rows, ties kept like
-    TPC-H. Window-min over the part key = one shuffle, no re-scan."""
+    TPC-H. Window-min over the part key = one shuffle, no re-scan.
+
+    Every dimension joins straight onto the fact side, so each build
+    side is a base table (or a filter of one) whose size the planner
+    knows; a pre-joined supplier⋈nation⋈region side would carry the
+    product of its inputs' size estimates and never broadcast."""
     p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_type") == "LARGE") & (F.col("p_size") < 10))
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    eu_supp = (s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-               .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-               .select("s_suppkey", "s_name", "n_name"))
     offers = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(eu_supp), li.l_suppkey == F.col("s_suppkey"))
+        li.join(p, li.l_partkey == p.p_partkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("p_partkey", "p_name", "s_suppkey", "s_name", "n_name")
         .agg(F.min("l_extendedprice").alias("supply_cost")))
     w = Window.partitionBy("p_partkey")

@@ -140,7 +140,7 @@ def nation_share_of_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     per_nation = (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        c.join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("n_regionkey", "n_name")
         .agg(F.count(F.lit(1)).alias("n_customers"))
     )

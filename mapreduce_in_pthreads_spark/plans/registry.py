@@ -1414,7 +1414,7 @@ register("markov_temporal_holdout", ts.markov_temporal_holdout,
          "the user-grouped md5 split cannot see")
 
 
-# --- round-8 additions (placed BEHIND the window: round 9 adjudicates) ----
+# --- round-8 additions -----------------------------------------------------
 register("sliding_window_dau", ts.sliding_window_dau,
          ts.SLIDING_DAU_SQL,
          "trailing 7-day distinct actives (WAU) beside DAU and the "
@@ -1514,92 +1514,17 @@ register("cramers_v_matrix", cu.cramers_v_matrix,
          "categorical axis pairs — normalized chi2 on [0,1], the "
          "which-axes-are-entangled table for stratified sampling")
 
-# --- round-9 additions (registered BEHIND the pinned round-9 window:
-# the _ADJUDICATION_FIRST tuple below controls the driver's first-50,
-# so these wait for the round-10 rotation) -------------------------------
+# --- round-9 additions -----------------------------------------------------
 register("keyframe_caption_align", mm.keyframe_caption_align,
          mm.KEYFRAME_CAPTION_SQL,
          "video-keyframe/caption JOINT alignment: shot-cut keyframes "
          "mapped to the UTF-8 byte-span caption token + W-token "
          "caption window — single mapInPandas pass, byte-exact twin")
 
-# --- round-10 additions (registered BEHIND the pinned round-10 window:
-# the _ADJUDICATION_FIRST tuple below controls the driver's first-50,
-# so these wait for the round-11 rotation) -------------------------------
+# --- round-10 additions ----------------------------------------------------
 register("audio_fingerprint_retrieval", mm.audio_fingerprint_retrieval,
          mm.AUDIO_FINGERPRINT_SQL,
          "cross-modal audio retrieval completing the alignment pair: "
          "Shazam-style (band, band, delta-pos) landmark fingerprints "
          "over the PCM int16 convention, pure-JVM hex parse, "
          "broadcast query side, top-k by shared-fingerprint count")
-
-# --- adjudication-window rotation -----------------------------------------
-# The driver adjudicates only the FIRST 50 registry entries per round
-# (CORRECTNESS_r{N}.json); everything else gets no correctness row. The
-# registry above is grouped thematically for humans; this list controls
-# which 50 face the driver this round. Rotate it each round so every
-# query eventually earns a driver-adjudicated correctness row. Entries
-# NOT listed keep their thematic order after the window — nothing is
-# ever dropped from queries()/oracle_sql().
-#
-# ROUND-10 WINDOW (registry at 348; 347 ever adjudicated, 1 never, per
-# CORRECTNESS_r01..r09): the plain `python tools/next_window.py`
-# proposal verbatim — the 6 MUST re-grades first (the five former
-# rows-only entries rebuilt as oracle-pinned audit panels in round 9,
-# whose last driver rows grade the OLD shapes: `approx_distinct`,
-# `approx_quantiles_events`, `hll_sketch_users`,
-# `stratified_sample_fractions`, `ann_topk_blas`; plus
-# `embedding_near_dup`, whose exact-path gate was resized 50k->5k
-# after its round-9 grade), then the one never-adjudicated entry
-# (`keyframe_caption_align`, round 9's addition), then 43 filler slots
-# chosen OLDEST-GRADE-FIRST (all r01/r02 grades — the new age-based
-# rotation policy in tools/next_window.py; flagship re-proof now rides
-# the same age schedule instead of consuming slots every round, having
-# just gone green in r09). Consuming this window restores
-# zero-verification-debt: every entry graded on its CURRENT shape.
-# Validate with `--check`.
-_ADJUDICATION_FIRST: tuple[str, ...] = (
-    "approx_distinct", "approx_quantiles_events", "hll_sketch_users",
-    "stratified_sample_fractions", "ann_topk_blas", "embedding_near_dup",
-    "keyframe_caption_align", "q1_pricing_summary", "q6_forecast_revenue",
-    "top_k_orders", "group_having", "distinct_agg",
-    "case_when_buckets", "in_between_predicates", "scalar_string_fns",
-    "date_functions", "rollup_status_priority", "cube_flag_status",
-    "set_union_all", "set_intersect", "set_except",
-    "set_intersect_all", "set_except_all", "revenue_by_nation",
-    "customer_order_stats", "customers_with_big_orders", "customers_without_orders",
-    "orders_with_heavy_items", "self_join_part_pairs", "top_orders_per_customer",
-    "running_customer_spend", "moving_avg_spend", "nation_share_of_region",
-    "map_functions", "explode_outer_rare_words", "purchases_with_prior_clicks",
-    "event_lag_lead", "tumbling_hourly", "sliding_2h_1h",
-    "session_windows_30m", "dedup_events_in_window", "json_props_extract",
-    "from_json_typed", "gap_fill_hourly", "merge_upsert_latest",
-    "value_histogram", "modal_event_type", "weekly_retention",
-    "variant_props_extract", "exact_dedup",
-)
-
-# ROTATION POLICY (since round 10, full-registry adjudication done):
-# do NOT hand-curate this tuple — run
-#     python tools/next_window.py --must <entries whose code changed>
-# which derives coverage debt from the committed CORRECTNESS_r*.json
-# files and the registry itself: MUST re-grades lead, then any
-# never-adjudicated entries, then OLDEST-GRADE-FIRST filler, so every
-# entry re-proves within ~ceil(348/50) = 7 rounds.  `--check` validates
-# whatever is pasted here (exactly 50 names, no duplicates, no typos,
-# no entry outside the window staler than non-MUST filler inside it)
-# and prints the fleet's max staleness.
-
-
-def _reorder_for_adjudication(first: tuple[str, ...]) -> None:
-    """Rebuild REGISTRY in place with ``first`` leading (KeyError on a
-    typo — fail loudly at import, not silently mid-adjudication)."""
-    snapshot = dict(REGISTRY)
-    REGISTRY.clear()
-    for name in first:
-        REGISTRY[name] = snapshot[name]
-    for name, query in snapshot.items():
-        if name not in REGISTRY:
-            REGISTRY[name] = query
-
-
-_reorder_for_adjudication(_ADJUDICATION_FIRST)

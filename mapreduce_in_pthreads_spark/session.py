@@ -5,6 +5,16 @@ counts (mapreduce.c:277-286); here the equivalents are
 ``spark.sql.shuffle.partitions`` plus AQE, which re-plans partition
 counts / skew joins at runtime — the knob the reference could never
 turn mid-job.
+
+Broadcast policy, stated once: the planner owns the join strategy. It
+broadcasts any side whose size estimate is under
+``autoBroadcastJoinThreshold``, and AQE re-plans on runtime sizes.
+Constant tables are built as ``LocalRelation``s
+(``sources/constants.py``) so their size is visible. An explicit
+``F.broadcast`` hint stays only where a relation's row count is bounded
+(a small key set, a per-query top-k) but its static estimate grows with
+the corpus; each such hint is listed with its bound in
+``tests/test_broadcast_hints.py``, which fails on any other hint.
 """
 
 from __future__ import annotations

@@ -21,10 +21,6 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor —
-# region/nation are fixed-size (5/25 rows at 100 TB too).
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
 # Catalog-style relation cache: spark.read.parquet() re-infers the
 # schema on EVERY call (~60-85 ms warm, measured), so a query calling
 # load_table 1-3 times pays 60-250 ms of pure metadata work per run.

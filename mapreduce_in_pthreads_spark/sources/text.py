@@ -8,31 +8,20 @@ including lines later dropped as empty (increment at mapreduce.c:109
 precedes the skip at 112-114).
 
 DataFrames have no row order, so per-file ordinals are the one place
-the reference's semantics need deliberate engineering (SURVEY.md §7):
-
-- default path: ``spark.read.text(wholeText=True)`` — one row per
-  file — then ``posexplode`` over the split lines. The ordinal is the
-  explode position, computed *before* any filtering, exactly like the
-  reference. One file = one row = one task; parallelism = #files,
-  which is precisely the reference's map-side DOP (``-p`` spawns one
-  producer per file, mapreduce.c:307-313).
-- ``big_files=True`` path: per-file RDD ``zipWithIndex`` for corpora
-  whose individual files don't fit in one task's memory. Scale note:
-  at 100 TB you'd use the default path over many files (the normal
-  shape for training corpora), not few giant ones.
+the reference's semantics need deliberate engineering (SURVEY.md §7).
+Each file is read whole — one row per file — then ``posexplode``
+runs over the split lines. The ordinal is the explode position, computed
+*before* any filtering, exactly like the reference. One file = one
+row = one task; parallelism = #files, which is precisely the
+reference's map-side DOP (``-p`` spawns one producer per file,
+mapreduce.c:307-313). At 100 TB the corpus is many files (the normal
+shape for training corpora), not few giant ones.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-CORPUS_SCHEMA = StructType([
-    StructField("filename", StringType(), False),
-    StructField("linenum", IntegerType(), False),
-    StructField("raw_line", StringType(), True),
-])
 
 # The reference's line buffer is MAXLEN=50 (mapreduce.c:19,105), so
 # each fgets call returns at most 49 bytes — a longer physical line
@@ -41,7 +30,6 @@ FGETS_BUF = 49
 
 
 def read_word_per_line(spark: SparkSession, paths: str | list[str],
-                       big_files: bool = False,
                        strict_fgets: bool = False) -> DataFrame:
     """Read text file(s) → DataFrame[filename, linenum, raw_line].
 
@@ -61,8 +49,6 @@ def read_word_per_line(spark: SparkSession, paths: str | list[str],
     """
     if isinstance(paths, str):
         paths = [paths]
-    if big_files:
-        return _read_big_files(spark, paths)
     # binaryFile + Latin-1 decode, NOT spark.read.text: the text source
     # strips a leading UTF-8 BOM, but the reference reads raw bytes
     # (fgets, mapreduce.c:107) and its golden output depends on the BOM
@@ -118,18 +104,3 @@ def read_word_per_line(spark: SparkSession, paths: str | list[str],
         "raw_line",
     )
 
-
-def _read_big_files(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """RDD zipWithIndex per file — line numbers without materializing a
-    whole file in one task. One sc.textFile per path keeps ordinals
-    per-file (zipWithIndex is ordered within a single file's splits)."""
-    sc = spark.sparkContext
-    dfs = []
-    for p in paths:
-        rdd = sc.textFile(p).zipWithIndex().map(
-            lambda t, _p=p: (_p, t[1] + 1, t[0]))
-        dfs.append(spark.createDataFrame(rdd, CORPUS_SCHEMA))
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionAll(d)
-    return out

@@ -330,8 +330,9 @@ def test_pq_adc_scoring_is_broadcast_side(spark, sf_dir):
 
 
 def test_bm25_broadcasts_stats_sides(spark, sf_dir):
-    """df/N/avgdl and the query list are broadcast; the corpus is
-    never on the build side of anything."""
+    """The df relation (per query term: bounded, so its hint is
+    allowlisted), the 1-row N/avgdl stats and the constant query list
+    broadcast; the corpus is never on the build side of anything."""
     p = plan(spark, sf_dir, "bm25_topk_docs")
     assert "CartesianProduct" not in p
     assert p.count("BroadcastHashJoin") >= 2

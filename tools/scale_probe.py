@@ -18,7 +18,7 @@ cardinalities scale the way a real 10× corpus would:
   * fact/entity keys get ``+ replica * 2^24`` strides (disjoint key ranges,
     FK joins keep exactly their base fan-out per replica);
   * ``region``/``nation`` stay fixed — TPC-H dims are constant-size at any
-    SF (sources/tables.py BROADCAST_TABLES);
+    SF;
   * ``documents.text`` is SPLICED per replica (first half of doc d + second
     half of doc (d + 37*replica) mod N, n_chars recomputed) so near-dup
     structure is preserved instead of multiplied: verbatim copies would
